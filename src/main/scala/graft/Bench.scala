@@ -161,8 +161,15 @@ object Bench {
     val floorBefore = {
       var f = measureFloor()
       if (args.isEmpty) {
-        val floorDeadline = System.nanoTime() +
-          sys.env.getOrElse("SPARK_GRAFT_FLOOR_WAIT_S", "300").toLong * 1000000000L
+        // a malformed budget falls back to the default, not a crash
+        val floorWaitS = sys.env.get("SPARK_GRAFT_FLOOR_WAIT_S").fold(300L) { v =>
+          v.trim.toLongOption.getOrElse {
+            System.err.println(
+              s"[bench] SPARK_GRAFT_FLOOR_WAIT_S=$v is not a whole number of seconds, using 300")
+            300L
+          }
+        }
+        val floorDeadline = System.nanoTime() + floorWaitS * 1000000000L
         while (f >= 0.06 && System.nanoTime() < floorDeadline) {
           System.err.println(f"[bench] floor $f%.3f >= 0.06 gate, waiting for CPU credits")
           Thread.sleep(20000)

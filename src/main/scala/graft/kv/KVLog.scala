@@ -1,6 +1,6 @@
 package graft.kv
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
@@ -18,12 +18,13 @@ import org.apache.spark.sql.functions.col
   *
   * Every run — including fresh, UN-compacted ones — is written with a
   * parquet bloom filter on the key column (the analog of the
-  * reference's `cache/bloom_filter_cache.rs` over SSTables). Min/max
-  * row-group stats only prune point gets after compaction key-clusters
-  * the files; an uncompacted run's key range spans everything, so
-  * without the bloom filter every point get decodes every run. With
-  * it, a probe for a key absent from a run skips the run's row groups
-  * without touching a data page.
+  * reference's `cache/bloom_filter_cache.rs` over SSTables), sized to
+  * the file's distinct keys at 1% false positives with a 1 MiB cap
+  * ([[KVRun]]). Min/max row-group stats only prune point gets after
+  * compaction key-clusters the files; an uncompacted run's key range
+  * spans everything, so without the bloom filter every point get
+  * decodes every run. With it, a probe for a key absent from a run
+  * skips the run's row groups without touching a data page.
   *
   * Layout: `<path>/run_<id>/` committed parquet runs; `<path>/.tmp_*`
   * in-flight writes (never read). Run ids are monotone per append so
@@ -42,9 +43,7 @@ final case class KVLog(path: String, keyCol: String, seqCol: String,
     sweepOrphanedTemps()
     val id = s"${System.currentTimeMillis()}_${java.util.UUID.randomUUID().toString.take(8)}"
     val tmp = Paths.get(path, s".tmp_run_$id")
-    batch.write
-      .option(s"parquet.bloom.filter.enabled#$keyCol", "true")
-      .parquet(tmp.toString)
+    KVRun.write(batch.write, keyCol, tmp.toString)
     require(Files.exists(tmp.resolve("_SUCCESS")),
       s"parquet job left no _SUCCESS marker under $tmp")
     Files.move(tmp, Paths.get(path, s"run_$id"),
@@ -124,16 +123,7 @@ final case class KVLog(path: String, keyCol: String, seqCol: String,
     val tmp = Paths.get(destPath + ".tmp_ckpt")
     graft.sources.LocalDir.deleteRecursively(tmp.toFile)
     Files.createDirectories(tmp)
-    runs.foreach { runDir =>
-      val src = Paths.get(runDir)
-      val dst = tmp.resolve(src.getFileName)
-      val walk = Files.walk(src)
-      try walk.forEach { p =>
-        val target = dst.resolve(src.relativize(p))
-        if (Files.isDirectory(p)) Files.createDirectories(target)
-        else Files.copy(p, target, StandardCopyOption.COPY_ATTRIBUTES)
-      } finally walk.close()
-    }
+    copyRuns(runs, tmp)
     Files.writeString(tmp.resolve("_CHECKPOINT"), runs.size.toString)
     graft.sources.LocalDir.deleteRecursively(new java.io.File(destPath))
     Files.move(tmp, dest, StandardCopyOption.ATOMIC_MOVE)
@@ -161,9 +151,19 @@ final case class KVLog(path: String, keyCol: String, seqCol: String,
     val tmp = Paths.get(destPath + ".tmp_ckpt")
     graft.sources.LocalDir.deleteRecursively(tmp.toFile)
     Files.createDirectories(tmp)
-    newRuns.foreach { runDir =>
+    copyRuns(newRuns, tmp)
+    Files.writeString(tmp.resolve("_CHECKPOINT_INC"),
+      s"base=$basePath\n${newRuns.size}")
+    graft.sources.LocalDir.deleteRecursively(new java.io.File(destPath))
+    Files.move(tmp, dest, StandardCopyOption.ATOMIC_MOVE)
+  }
+
+  /** Copy each run directory's tree byte-for-byte (attributes kept)
+    * into `destDir`, under the run's own name. */
+  private def copyRuns(runDirs: Seq[String], destDir: Path): Unit =
+    runDirs.foreach { runDir =>
       val src = Paths.get(runDir)
-      val dst = tmp.resolve(src.getFileName)
+      val dst = destDir.resolve(src.getFileName)
       val walk = Files.walk(src)
       try walk.forEach { p =>
         val target = dst.resolve(src.relativize(p))
@@ -171,11 +171,6 @@ final case class KVLog(path: String, keyCol: String, seqCol: String,
         else Files.copy(p, target, StandardCopyOption.COPY_ATTRIBUTES)
       } finally walk.close()
     }
-    Files.writeString(tmp.resolve("_CHECKPOINT_INC"),
-      s"base=$basePath\n${newRuns.size}")
-    graft.sources.LocalDir.deleteRecursively(new java.io.File(destPath))
-    Files.move(tmp, dest, StandardCopyOption.ATOMIC_MOVE)
-  }
 }
 
 object KVLog {

@@ -192,19 +192,18 @@ final case class KVTable(runs: DataFrame, keyCol: String, seqCol: String,
     * predicates prune to one file/row-group at the scan.
     *
     * A parquet bloom filter is written on the key column (the analog
-    * of the reference's `cache/bloom_filter_cache.rs` over SSTables):
-    * min/max stats alone can't reject a point probe that falls
-    * INSIDE a row group's key range but isn't present — common once
-    * upstream runs aren't clustered or keys are high-cardinality
-    * non-contiguous; the bloom filter rejects those row groups
-    * without decoding a page. */
+    * of the reference's `cache/bloom_filter_cache.rs` over SSTables),
+    * sized to each file's distinct keys at 1% false positives with a
+    * 1 MiB cap ([[KVRun]]): min/max stats alone can't reject a point
+    * probe that falls INSIDE a row group's key range but isn't
+    * present — common once upstream runs aren't clustered or keys are
+    * high-cardinality non-contiguous; the bloom filter rejects those
+    * row groups without decoding a page. */
   def compactTo(path: String, numRanges: Int): KVTable = {
-    merged()
+    KVRun.write(merged()
       .repartitionByRange(numRanges, col(keyCol))
       .sortWithinPartitions(keyCol)
-      .write.mode("overwrite")
-      .option(s"parquet.bloom.filter.enabled#$keyCol", "true")
-      .parquet(path)
+      .write.mode("overwrite"), keyCol, path)
     val reloaded = runs.sparkSession.read.parquet(path)
       .withColumn(tombstoneCol, org.apache.spark.sql.functions.lit(false))
     KVTable(reloaded, keyCol, seqCol, tombstoneCol)

@@ -296,13 +296,14 @@ object Streams {
     * idempotence the reference gets from WAL record framing +
     * sequence-checked replay
     * (`storage_engine/src/wal/wal_record_writer.rs`); here the
-    * batchId is the framing. */
+    * batchId is the framing. Same write rule as `KVLog.append` and
+    * `KVTable.compactTo` ([[graft.kv.KVRun]]): every run carries a key
+    * bloom filter, sized to the file's distinct keys at 1% false
+    * positives with a 1 MiB cap, so point gets prune fresh
+    * uncompacted runs. */
   def ingestBatch(batch: DataFrame, runsDir: String, batchId: Long): Unit =
-    batch.write.mode("overwrite")
-      // same rule as KVLog.append/KVTable.compactTo: every run carries
-      // a key bloom filter so point gets prune fresh uncompacted runs
-      .option("parquet.bloom.filter.enabled#key", "true")
-      .parquet(s"$runsDir/run-$batchId")
+    graft.kv.KVRun.write(batch.write.mode("overwrite"), "key",
+      s"$runsDir/run-$batchId")
 
   /** All accumulated runs of a [[kvIngest]] directory (one subdir per
     * micro-batch). */

@@ -107,6 +107,25 @@ class KVLogSpec extends SparkSuite {
       "bloom filter failed to reject the absent key's row groups")
   }
 
+  test("a run's key filter is sized to its keys: a 1,000-row run gets a small filter at <= 1% false positives") {
+    val log = freshLog()
+    // keys 0, 8, …, 7992: seven absent keys between neighbours, all
+    // inside the run's [min,max], so only the filter can reject them
+    val keys = (0L until 1000L).map(_ * 8)
+    log.append(batch(keys.map(k => (k, k, false, k.toDouble))).coalesce(1))
+    val filters = keyFilters(log.committedRuns.head)
+    assert(filters.nonEmpty)
+    val absent = (1L until keys.last).filter(_ % 8 != 0).take(4000)
+    assert(absent.size == 4000)
+    filters.foreach { f =>
+      assert(f.getBitsetSize <= 16 * 1024,
+        s"key filter of ${f.getBitsetSize} bytes for 1,000 keys")
+      assert(keys.forall(k => f.findHash(f.hash(k))), "a present key is missing")
+      val fpShare = absent.count(k => f.findHash(f.hash(k))).toDouble / absent.size
+      assert(fpShare <= 0.01, s"false-positive share $fpShare over 4,000 absent keys")
+    }
+  }
+
   test("checkpoint is physically independent of the source and skips in-flight temps") {
     val log = freshLog()
     log.append(batch(Seq((1L, 1L, false, 10.0), (2L, 2L, false, 20.0))))

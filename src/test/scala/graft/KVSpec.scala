@@ -124,6 +124,20 @@ class KVSpec extends SparkSuite {
     } finally footer.close()
   }
 
+  test("compactTo sizes each output file's key filter to the keys it holds") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_kv_compact_filter").toString + "/runs"
+    val table = KVTable(
+      (0L until 1000L).map(k => (k * 8, k, false, k.toDouble))
+        .toDF("key", "seq", "tombstone", "v"),
+      "key", "seq", "tombstone")
+    table.compactTo(dir, numRanges = 2)
+    val filters = keyFilters(dir)
+    assert(filters.nonEmpty)
+    filters.foreach(f => assert(f.getBitsetSize <= 16 * 1024,
+      s"key filter of ${f.getBitsetSize} bytes for at most 1,000 keys"))
+  }
+
   test("compaction output equals merged view and is one self-contained run") {
     val compacted = fixture.compacted()
     // re-reading the compacted run as a fresh KV table is a fixpoint

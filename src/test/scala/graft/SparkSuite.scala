@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.parquet.column.values.bloomfilter.BloomFilter
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -9,6 +12,27 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSuite.session
   val sfDir: String = SparkSuite.sfDirDefault
+
+  /** The key-column bloom filter of every row group of every parquet
+    * file under `dir`. A row group without one fails the test. */
+  def keyFilters(dir: String, keyCol: String = "key"): Seq[BloomFilter] = {
+    import scala.jdk.CollectionConverters._
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+    val files = try walk.iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".parquet")).toList
+    finally walk.close()
+    files.flatMap { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.toString),
+        spark.sparkContext.hadoopConfiguration))
+      try reader.getFooter.getBlocks.asScala.toSeq.map { block =>
+        val chunk = block.getColumns.asScala
+          .find(_.getPath.toDotString == keyCol).get
+        assert(chunk.getBloomFilterOffset > 0, s"no $keyCol bloom filter in $f")
+        reader.readBloomFilter(chunk)
+      } finally reader.close()
+    }
+  }
 }
 
 /** Orders a streaming-fixture directory's chunks without wall-clock
@@ -28,6 +52,10 @@ final class ChunkStamper(dir: String) {
     * mtime. Call once after each chunk write, in arrival order. */
   def stamp(): Unit = {
     t += 10000L
+    // a stamp in the future would replay this chunk after files
+    // written later, breaking the arrival order the stamps encode
+    assert(t < System.currentTimeMillis(),
+      s"chunk stamp $t is not in the past: too many chunks for the 1 h head start")
     val s = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
     try {
       import scala.jdk.CollectionConverters._

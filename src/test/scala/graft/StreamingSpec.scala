@@ -303,6 +303,18 @@ class StreamingSpec extends SparkSuite {
     }
   }
 
+  test("ingestBatch sizes each run file's key filter to the keys it holds") {
+    import spark.implicits._
+    val runsDir = Files.createTempDirectory("graft_kv_runs_filter").toString + "/runs"
+    val batch = (0L until 1000L).map(k => (k * 8, k, false, k.toDouble))
+      .toDF("key", "seq", "tombstone", "v").coalesce(1)
+    Streams.ingestBatch(batch, runsDir, 0L)
+    val filters = keyFilters(s"$runsDir/run-0")
+    assert(filters.nonEmpty)
+    filters.foreach(f => assert(f.getBitsetSize <= 16 * 1024,
+      s"key filter of ${f.getBitsetSize} bytes for 1,000 keys"))
+  }
+
   test("incremental materialized view converges to batch and survives replay") {
     withEventsStream { (src, events) =>
       val runsDir = Files.createTempDirectory("graft_matview").toString + "/runs"
