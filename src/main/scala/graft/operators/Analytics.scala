@@ -371,9 +371,9 @@ object Analytics {
     * Scale: rounds = graph depth (log n here, diameter in general);
     * per-round shuffle is O(frontier). Each level is eagerly
     * persisted and the final union localCheckpoint'ed, then all loop
-    * state freed — same residency discipline as
-    * [[Dedup.connectedComponents]]. The driver sees only an
-    * empty-check per round. */
+    * state freed — superseded rounds are released as in
+    * [[largeSmallStar]]. The driver sees only an empty-check per
+    * round. */
   /** Ancestor closure of an arbitrary acyclic edge RELATION
     * (`node`, `parent`): (node, anc, depth) for every transitive
     * ancestor. The iterative frontier⋈edges dataflow recursive CTEs
@@ -730,7 +730,7 @@ object Analytics {
 
   /** Exact TRIANGLE COUNTING per node — the standard graph metric
     * for cluster quality (e.g. judging whether a near-dup cluster
-    * from [[Dedup.connectedComponents]] is a dense clique or a
+    * from [[labelComponents]] is a dense clique or a
     * strung-out chain of borderline matches). The edge relation is
     * derived deterministically from lineitem (as q59 derives its
     * tree), then the count only ever reads the relation.
@@ -3123,21 +3123,22 @@ object Analytics {
 
   /** Large-star/small-star connected components (Kiveris et al.,
     * "Connected Components in MapReduce and Beyond", SoCC 2014) —
-    * the O(log n)-round alternative to min-label propagation
-    * ([[Dedup.connectedComponents]]), whose round count is the graph
-    * DIAMETER. At 100 TB, dedup graphs routinely contain long chains
-    * (substring-overlap chains, URL redirect chains), and
+    * graft's one connected-components kernel. It takes O(log n)
+    * rounds, where min-label propagation takes as many rounds as the
+    * graph's DIAMETER. At 100 TB, dedup graphs routinely contain long
+    * chains (substring-overlap chains, URL redirect chains), and
     * diameter-bound propagation simply does not finish on them; star
     * contraction hangs every node below a local minimum each round,
     * roughly halving path lengths, so rounds track the LOG of the
-    * largest component. Each half-round is ONE window aggregation
+    * largest component. Each half-round is ONE secondary-sort pass
     * keyed on the grouping node — a single keyed shuffle of the edge
     * list, no join and no driver-held state; the (checkpointed) edge
     * list is the only loop state, and a per-batch localCheckpoint
-    * bounds lineage exactly as in [[Dedup.connectedComponents]].
-    * Returns the converged star forest (node -> component min) and
-    * the rounds taken; AnalyticsSpec pins the log-round bound on a
-    * chain where label propagation provably cannot converge. */
+    * bounds lineage. Returns the converged star forest (node ->
+    * component min, roots omitted) and the rounds taken;
+    * [[labelComponents]] turns it into a label per node. AnalyticsSpec
+    * pins the log-round bound on a chain where label propagation
+    * provably cannot converge. */
   private[graft] def largeSmallStar(edgesIn: DataFrame,
                                     maxIter: Int = 32,
                                     localMaxBytes: Long = 64L << 20): (DataFrame, Int) = {
@@ -3286,8 +3287,7 @@ object Analytics {
       // localCheckpoint: truncate lineage at every batch so a lost
       // partition never recomputes across batches and the DAG stays
       // one batch deep; superseded checkpoint blocks are reclaimed by
-      // the ContextCleaner once unreferenced (the same guarantee
-      // Dedup.connectedComponents leans on)
+      // the ContextCleaner once unreferenced
       next.localCheckpoint()
       val nextCount = next.count()
       // fixpoint = identical edge set: both sides are distinct, so
@@ -3304,19 +3304,37 @@ object Analytics {
     (spark.createDataset(e).toDF("u", "v"), rounds)
   }
 
+  /** Connected components of `edges` (two node-id columns) over the
+    * node set `nodes` (one node-id column): every node with its
+    * component id, the component's minimum node, in column `label`.
+    * Runs [[largeSmallStar]] and joins its star forest back onto the
+    * node set; a node without a star edge (a component root or an
+    * isolated node) is its own label. The join pins `shuffle_hash`:
+    * the node set is corpus-derived and must never become a driver
+    * hashed relation (SURVEY §4.3). */
+  private[graft] def labelComponents(nodes: DataFrame, edges: DataFrame,
+                                     label: String): DataFrame = {
+    val node = nodes.columns.head
+    val (stars, _) = largeSmallStar(edges)
+    nodes
+      .join(stars.withColumnRenamed("u", node).hint("shuffle_hash"),
+        Seq(node), "left")
+      .select(col(node), coalesce(col("v"), col(node)).as(label))
+  }
+
   /** §2.3 dedup clustering at scale: connected components by star
     * contraction over a deterministic block-local chain graph derived
     * from `events` (24 blocks of 250 ids, step-7 edges within a block
     * → 168 long path components, the label-propagation WORST case —
-    * see [[largeSmallStar]] for why this operator exists next to
-    * [[Dedup.connectedComponents]]). Output: every node with its
-    * component id (the component min), the cluster assignment a dedup
-    * pipeline joins back to pick winners. The oracle recomputes
-    * components with machinery the operator never touches — recursive
-    * undirected reachability (UNION-dedup recursion) + min over the
-    * reached set — so the contraction is checked end-to-end. Both
-    * joins pin `shuffle_hash`: the node table is corpus-derived and
-    * must never become a driver hashed relation (SURVEY §4.3). */
+    * see [[largeSmallStar]]). Output: every node with its component
+    * id (the component min, via [[labelComponents]]), the cluster
+    * assignment a dedup pipeline joins back to pick winners. The
+    * oracle recomputes components with machinery the operator never
+    * touches — recursive undirected reachability (UNION-dedup
+    * recursion) + min over the reached set — so the contraction is
+    * checked end-to-end. Both joins pin `shuffle_hash`: the node table
+    * is corpus-derived and must never become a driver hashed relation
+    * (SURVEY §4.3). */
   val graphComponents: Op = Op.sql("graph_components",
     """WITH RECURSIVE nodes AS (
       |  SELECT DISTINCT event_id % 6000 AS node FROM events),
@@ -3344,12 +3362,7 @@ object Analytics {
       .join(right.hint("shuffle_hash"), col("b") === col("node") + 7)
       .filter(expr("node DIV 250") === expr("(node + 7) DIV 250"))
       .select(col("node").as("x"), col("b").as("y"))
-    val (stars, _) = largeSmallStar(edges)
-    nodes
-      .join(stars.withColumnRenamed("u", "node").hint("shuffle_hash"),
-        Seq("node"), "left")
-      .select(col("node"), coalesce(col("v"), col("node")).as("component"))
-      .orderBy("node")
+    labelComponents(nodes, edges, "component").orderBy("node")
   }
 
   val all: Seq[Op] = Seq(q40Cube, q41Pivot, q42Explode, q43WindowFrames,

@@ -668,73 +668,15 @@ object Dedup {
         (col("n_hit") * 1.0 / col("n_planted")).as("recall_planted"))
   }
 
-  /** Connected components over an undirected edge list by iterative
-    * min-label propagation: each round every node takes the minimum
-    * label in its neighborhood (one keyed join + one min-aggregate —
-    * both plain shuffles on node id), until a fixpoint. Rounds ≈
-    * graph diameter; duplicate graphs are near-clique, so 2-3 rounds
-    * in practice. `localCheckpoint` truncates the loop's lineage
-    * (without it the plan doubles every round). At extreme scale the
-    * large-star/small-star variant (Kiveris et al.) halves round
-    * count; the per-round dataflow is identical to this one.
-    *
-    * The driver holds only the convergence COUNTER — labels
-    * themselves never leave the cluster. */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 20): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    // plain persist, NOT localCheckpoint: the loop below re-reads sym
-    // every round, and a persisted copy can be unpersisted on exit
-    // without stranding anything (a checkpoint's blocks would have to
-    // outlive the function because truncated lineage can't recompute).
-    // Plan growth stays bounded — labels' periodic checkpoint caps
-    // how many times sym's (leaf-sized) subtree is embedded.
-    val sym = edges.toDF("a", "b")
-      .unionAll(edges.toDF("b", "a").select("a", "b"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var labels = sym.select(col("a").as("id")).distinct()
-      .withColumn("label", col("id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      val neighborMin = sym.join(labels.hint("shuffle_hash"), sym("b") === labels("id"))
-        .select(sym("a").as("id"), col("label"))
-      // persist each round and DROP the previous one — residency stays
-      // at two label sets, not O(rounds); a periodic localCheckpoint
-      // bounds the lineage depth instead of checkpointing every round
-      var next = labels.unionByName(neighborMin)
-        .groupBy("id").agg(min("label").as("label"))
-      next = (if ((iter + 1) % 8 == 0) next.localCheckpoint()
-              else next.persist(StorageLevel.MEMORY_AND_DISK))
-      converged = next.join(
-        labels.withColumnRenamed("label", "old").hint("shuffle_hash"), "id")
-        .filter(col("label") =!= col("old")).isEmpty
-      labels.unpersist()
-      labels = next
-      iter += 1
-    }
-    // detach the result from ALL loop state before freeing it: the
-    // eager localCheckpoint copies the converged labels into their own
-    // self-contained blocks (lineage truncated), so unpersisting the
-    // loop's cached copies can never force a recompute of freed state.
-    // Repeated calls therefore leave behind only their own result —
-    // the ContextCleaner reclaims it once the caller drops the frame —
-    // instead of accumulating a labels+sym cache per invocation.
-    val out = if (converged) labels.localCheckpoint(true) else labels
-    labels.unpersist()
-    sym.unpersist()
-    require(converged, s"connectedComponents: no fixpoint after $maxIter rounds")
-    out
-  }
-
   /** Duplicate-cluster assignment — the step that turns near-dup
     * PAIRS into an actionable dedup decision (keep the minimum id
     * per cluster, drop the rest). Pairs come from the exact-dup
     * corpus' content-hash join; components come from
-    * [[connectedComponents]]. The oracle recomputes cluster ids
-    * independently as `min(doc_id) per identical text` — valid
-    * because exact-dup groups are cliques — so the propagation
-    * machinery is checked end-to-end against SQL. */
+    * [[Analytics.labelComponents]] (large-star/small-star, O(log n)
+    * rounds, so a long chain of pairs converges too). The oracle
+    * recomputes cluster ids independently as `min(doc_id) per
+    * identical text` — valid because exact-dup groups are cliques — so
+    * the component machinery is checked end-to-end against SQL. */
   val dedupCluster: Op = Op.sql("dedup_cluster",
     """WITH corpus AS (
       |  SELECT doc_id, text FROM documents
@@ -748,11 +690,7 @@ object Dedup {
     val edges = hashed.as("l").join(hashed.as("r"), col("l.h") === col("r.h"))
       .filter(col("l.doc_id") < col("r.doc_id"))
       .select(col("l.doc_id").as("a"), col("r.doc_id").as("b"))
-    val labels = connectedComponents(edges)
-    corpus.select("doc_id")
-      .join(labels, corpus("doc_id") === labels("id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("label"), col("doc_id")).as("cluster_id"))
+    Analytics.labelComponents(corpus.select("doc_id"), edges, "cluster_id")
       .withColumn("keep", col("doc_id") === col("cluster_id"))
       .orderBy("doc_id")
   }
@@ -1217,9 +1155,9 @@ object Dedup {
     docContainment(corpusSub(s, dir)).orderBy("doc_id")
   }
 
-  /** The near-dup DECISION end-to-end (round 8): LSH candidate pairs
+  /** The near-dup DECISION end-to-end: LSH candidate pairs
     * ([[minhashCandidates]]) → connected components by large-star/
-    * small-star contraction ([[Analytics.largeSmallStar]] — the
+    * small-star contraction ([[Analytics.labelComponents]] — the
     * O(log n)-round machinery, here consuming REAL near-dup pairs
     * rather than the synthetic chain graph) → keep the minimum id per
     * component. This is what `dedup_cluster` does for EXACT dups,
@@ -1252,13 +1190,8 @@ object Dedup {
   }) { (s, dir) =>
     val corpus = corpusNear(s, dir)
     val pairs = minhashCandidates(corpus)
-    val (stars, _) = Analytics.largeSmallStar(pairs)
-    corpus.select(col("doc_id"))
-      .join(stars.withColumnRenamed("u", "doc_id").hint("shuffle_hash"),
-        Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("v"), col("doc_id")).as("component"),
-        (coalesce(col("v"), col("doc_id")) === col("doc_id")).as("keep"))
+    Analytics.labelComponents(corpus.select("doc_id"), pairs, "component")
+      .withColumn("keep", col("component") === col("doc_id"))
       .orderBy("doc_id")
   }
 

@@ -60,12 +60,12 @@ object KV {
     s"""WITH $kvCte
        |SELECT * FROM ${mergeSql("kv", "key BETWEEN 3 AND 12")}
        |ORDER BY key""".stripMargin) { (s, dir) =>
-    // bounded-reduce pin (r12): THIS op's range is a literal 10-key
-    // window, so its latest-wins merge is a ≤10-group reduce — one
-    // scheduler job (Tuned). The KVTable.range API itself stays on
-    // the caller's session with the runtime size gate: its bounds
-    // are caller-controlled, the r9 contract.
-    kv(Tuned.boundedReduce(s), dir).range(lit(3L), lit(12L))
+    // bounded-reduce pin: THIS op's range is a literal 10-key window,
+    // so its latest-wins merge is a ≤10-group reduce — one scheduler
+    // job (Tuned.sizedOneJob). The KVTable.range API itself stays on
+    // the caller's session with the runtime size gate: its bounds are
+    // caller-controlled.
+    kv(Tuned.sizedOneJob(s), dir).range(lit(3L), lit(12L))
   }
 
   val kvCompact: Op = Op.sql("kv_compact",

@@ -65,10 +65,11 @@ object Relational {
       |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
       |GROUP BY l_returnflag, l_linestatus
       |ORDER BY l_returnflag, l_linestatus""".stripMargin) { (s0, dir) =>
-    // bounded-reduce pin (r12, measured): ≤6 output groups — the one
-    // shuffle is a |groups|-row aggregate, so AQE's per-stage jobs
-    // buy nothing; Tuned.boundedReduce runs the query as ONE job
-    val s = Tuned.boundedReduce(s0)
+    // bounded-reduce pin (measured): ≤6 output groups — the one
+    // shuffle is a |groups|-row aggregate, so AQE's per-stage jobs buy
+    // nothing; Tuned.sizedOneJob with no inputs runs the query as ONE
+    // job at its partition floor
+    val s = Tuned.sizedOneJob(s0)
     // ONE-TEXT construction (r13, measured): the 7-aggregate Dataset
     // chain re-ran the eager analyzer per transformation — 0.068 s of
     // construction per bench rep (graft.Profile construct_s, the
@@ -461,10 +462,10 @@ object Relational {
       |FROM orders WHERE o_custkey < 50
       |ORDER BY o_custkey, o_orderkey""".stripMargin) { (s0, dir) =>
     import org.apache.spark.sql.expressions.Window
-    // bounded-reduce pin (r12): everything past the scan runs over
-    // the ≤~500 literally-bounded rows, so the one repartition(1)
-    // funnel needs no AQE service — ONE scheduler job (Tuned)
-    val s = Tuned.boundedReduce(s0)
+    // bounded-reduce pin: everything past the scan runs over the
+    // ≤~500 literally-bounded rows, so the one repartition(1) funnel
+    // needs no AQE service — ONE scheduler job (Tuned.sizedOneJob)
+    val s = Tuned.sizedOneJob(s0)
     val byCust = Window.partitionBy("o_custkey")
     // `o_custkey < 50` is a LITERAL point predicate: ≤50 customers ×
     // ~10 orders each at ANY corpus size (TPC-H keeps orders/customer

@@ -63,9 +63,9 @@ object Streaming {
     // corpus-sized (a decade of hourly buckets is ~90k rows): the
     // global order is a single-partition sort (Bounded), no range
     // exchange + sampling job over a dashboard-sized aggregate.
-    // bounded-reduce pin (r12): the one exchange is that
-    // dashboard-sized aggregate — ONE scheduler job (Tuned)
-    val s = graft.operators.Tuned.boundedReduce(s0)
+    // bounded-reduce pin: the one exchange is that dashboard-sized
+    // aggregate — ONE scheduler job (Tuned.sizedOneJob)
+    val s = Tuned.sizedOneJob(s0)
     Bounded.ordered(Streams.windowAgg(Tables.load(s, dir, "events")),
       col("win_start"), col("event_type"))
   }

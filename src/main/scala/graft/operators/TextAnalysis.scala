@@ -918,7 +918,7 @@ object TextAnalysis {
     * (one hash-agg) → the 1-row argmax to the driver (bounded index
     * metadata, the same policy as the ANN centroids) → the merge
     * applied distributed via [[bpeMergePair]]. Lineage is truncated
-    * per round like [[Dedup.connectedComponents]]. Ties break
+    * per round like [[Analytics.largeSmallStar]]'s batches. Ties break
     * deterministically on (count desc, l asc, r asc). */
   def bpeTrain(words: DataFrame, rounds: Int): Seq[(Int, String, String, Long)] = {
     val merges = Seq.newBuilder[(Int, String, String, Long)]

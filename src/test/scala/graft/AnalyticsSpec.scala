@@ -507,11 +507,22 @@ class AnalyticsSpec extends SparkSuite {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(local == labels, "local union-find diverges from the contraction")
     // the diameter-bound algorithm provably cannot finish a 61-node
-    // chain in 12 rounds — this is WHY the operator exists
-    val chain60 = (0L until 60L).map(i => (i, i + 1)).toDF("x", "y")
-    intercept[IllegalArgumentException] {
-      graft.operators.Dedup.connectedComponents(chain60, maxIter = 12)
+    // chain in 12 rounds — this is WHY the operator exists. Min-label
+    // propagation: each round every node takes the least label in its
+    // closed neighborhood, until a round changes nothing.
+    val chain60 = (0L until 60L).map(i => (i, i + 1))
+    val nbrs = (chain60 ++ chain60.map(_.swap)).groupMap(_._1)(_._2)
+    var prop = nbrs.keys.map(n => n -> n).toMap
+    var moved = true
+    var propRounds = 0
+    while (moved && propRounds < 12) {
+      val next = prop.map { case (n, l) => n -> (l +: nbrs(n).map(prop)).min }
+      moved = next != prop
+      prop = next
+      propRounds += 1
     }
+    assert(moved && prop(60L) != 0L,
+      s"label propagation converged on a 61-node chain in $propRounds rounds")
   }
 
   test("KS statistic matches an in-process sequential ECDF recompute") {
@@ -1477,6 +1488,27 @@ class AnalyticsSpec extends SparkSuite {
     }
   }
 
+  /** In-process min-root union-find oracle: every endpoint of `edges`
+    * with its component's MIN node id. Attaching the larger root under
+    * the smaller makes each root the component minimum — exactly the
+    * label the star kernel emits — and the driver-side recompute is
+    * engine-independent. */
+  private def unionFindLabels(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(a: Long): Long = {
+      var r = a
+      while (parent.getOrElse(r, r) != r) r = parent(r)
+      var c = a
+      while (parent.getOrElse(c, c) != c) { val nx = parent(c); parent(c) = r; c = nx }
+      r
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
+    }
+    edges.flatMap(e => Seq(e._1, e._2)).distinct.map(nd => nd -> find(nd)).toMap
+  }
+
   test("graph_components property: star labels equal an in-process union-find on seeded random graphs") {
     import spark.implicits._
     val rnd = new scala.util.Random(11)
@@ -1485,29 +1517,7 @@ class AnalyticsSpec extends SparkSuite {
       val edges = (1 to n).map(_ => (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
         .filter(e => e._1 != e._2)
       val df = edges.toDF("x", "y")
-      // In-process min-root union-find oracle (r13; replaced the
-      // Spark label-propagation loop, which cost ~5 min of suite
-      // wall for ≤100-node fixtures — the driver-side recompute is
-      // engine-independent, a strictly stronger check at zero cost;
-      // the propagation kernel itself stays covered by the
-      // mixed-graph test below and by its own oracle-checked ops).
-      // Attaching the larger root under the smaller makes each
-      // component's root its MIN node id — exactly the label both
-      // kernels emit.
-      val parent = scala.collection.mutable.Map[Long, Long]()
-      def find(a: Long): Long = {
-        var r = a
-        while (parent.getOrElse(r, r) != r) r = parent(r)
-        var c = a
-        while (parent.getOrElse(c, c) != c) { val nx = parent(c); parent(c) = r; c = nx }
-        r
-      }
-      edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-      }
-      val want = edges.flatMap(e => Seq(e._1, e._2)).distinct
-        .map(nd => nd -> find(nd)).toMap
+      val want = unionFindLabels(edges)
       // BOTH kernels against the oracle: the size-gated local
       // union-find (default) and the distributed contraction
       // (localMaxBytes = 0), which the gate would otherwise hide at
@@ -1523,17 +1533,17 @@ class AnalyticsSpec extends SparkSuite {
     }
   }
 
-  test("graph_components: star labels equal label-propagation labels on a mixed graph") {
+  test("graph_components: star labels equal union-find labels on a mixed graph") {
     import spark.implicits._
-    val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L), (11L, 12L), (12L, 10L),
-      (20L, 21L), (21L, 22L), (22L, 23L), (5L, 6L)).toDF("x", "y")
+    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L), (11L, 12L), (12L, 10L),
+      (20L, 21L), (21L, 22L), (22L, 23L), (5L, 6L))
+    val edges = pairs.toDF("x", "y")
     val (stars, _) = Analytics.largeSmallStar(edges)
     val viaStar = stars.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaProp = graft.operators.Dedup.connectedComponents(edges)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val viaUf = unionFindLabels(pairs)
     // star forest omits roots (label = self there); align the two
-    val aligned = viaProp.map { case (n, _) => n -> viaStar.getOrElse(n, n) }
-    assert(aligned == viaProp, s"star=$aligned prop=$viaProp")
+    val aligned = viaUf.map { case (n, _) => n -> viaStar.getOrElse(n, n) }
+    assert(aligned == viaUf, s"star=$aligned union-find=$viaUf")
   }
 
   test("walk sample: every step follows a real edge, all walks complete, and reruns are identical") {

@@ -1,8 +1,9 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.Dedup
+import graft.operators.{Analytics, Dedup}
 
 /** Near-dup detection quality on the derived corpus: 500 planted
   * near-duplicate pairs (i, i+100000) = original text vs first word
@@ -15,6 +16,14 @@ class DedupSpec extends SparkSuite {
   private def plantedRecall(pairs: Array[(Long, Long)]): Double = {
     val planted = pairs.count { case (a, b) => b == a + 100000 }
     planted.toDouble / nDocs
+  }
+
+  /** Component label per endpoint of the (a, b) `edges`, through the
+    * kernel dedup_cluster uses. */
+  private def componentsOf(edges: DataFrame): Map[Long, Long] = {
+    val nodes = edges.select(col("a").as("id")).union(edges.select(col("b"))).distinct()
+    Analytics.labelComponents(nodes, edges, "label").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
 
   test("minhash LSH recovers nearly all planted near-dup pairs") {
@@ -64,11 +73,20 @@ class DedupSpec extends SparkSuite {
     // disjoint pair 10-11, triangle 20-21-22
     val edges = Seq((2L, 1L), (2L, 3L), (3L, 4L), (10L, 11L),
       (20L, 21L), (21L, 22L), (20L, 22L)).toDF("a", "b")
-    val got = Dedup.connectedComponents(edges).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val got = componentsOf(edges)
     assert(Seq(1L, 2L, 3L, 4L).forall(got(_) == 1L))
     assert(Seq(10L, 11L).forall(got(_) == 10L))
     assert(Seq(20L, 21L, 22L).forall(got(_) == 20L))
+  }
+
+  test("connected components collapse a 64-node chain to component 0") {
+    import spark.implicits._
+    // diameter 63: min-label propagation would need 63 rounds and
+    // stopped at 20; the star kernel dedup_cluster uses takes O(log n)
+    val edges = (0L until 63L).map(i => (i, i + 1)).toDF("a", "b")
+    val got = componentsOf(edges)
+    assert(got.keySet == (0L until 64L).toSet)
+    assert(got.values.forall(_ == 0L), s"chain split into ${got.values.toSet}")
   }
 
   test("semantic dedup: drops within-cell near-dups, keeps distinct members") {

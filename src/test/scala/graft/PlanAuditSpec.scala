@@ -807,7 +807,7 @@ class PlanAuditSpec extends SparkSuite {
   }
 
   test("bounded-reduce ops run non-adaptive on the Tuned session (one scheduler job)") {
-    // Tuned.boundedReduce (r12): ops whose ONLY exchange is a
+    // Tuned.sizedOneJob with no inputs: ops whose ONLY exchange is a
     // literally-bounded reduce (q1's ≤6 groups, q22's ≤~500 filtered
     // rows, stream_window_agg's hours×types dashboard aggregate) run
     // with AQE off so all stages submit as one job — AQE's per-stage

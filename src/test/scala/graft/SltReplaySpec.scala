@@ -314,10 +314,14 @@ class SltReplaySpec extends SparkSuite {
     (passed, failures.result(), skipped)
   }
 
-  private def sltFiles: Seq[File] =
+  /** The expected values exist only in the reference's .slt files:
+    * without them nothing can replay, a failure that names its cause. */
+  private def sltFiles: Seq[File] = {
+    if (!new File(SltRoot).isDirectory) fail(s"slt fixture root missing: $SltRoot")
     (new File(SltRoot).listFiles.toSeq ++
       new File(s"$SltRoot/csv").listFiles.toSeq)
       .filter(_.getName.endsWith(".slt")).sortBy(_.getName)
+  }
 
   test("reference slt files replay green (pinned counts)") {
     var files = 0; var green = 0; var records = 0; var skips = 0

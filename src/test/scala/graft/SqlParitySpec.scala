@@ -274,11 +274,11 @@ class SqlParitySpec extends SparkSuite {
   test("every Spark-dialect-compatible oracle runs via spark.sql and matches its operator") {
     // DuckDB double-quotes identifiers ("value"); default Spark parses
     // "..." as a string literal. ANSI double-quoted identifiers give
-    // the oracle text its DuckDB meaning — scoped to a child session
+    // the oracle text its DuckDB meaning — scoped to a derived session
     // so the rest of the suite keeps default parsing.
-    val sess = spark.newSession()
-    sess.conf.set("spark.sql.ansi.enabled", "true")
-    sess.conf.set("spark.sql.ansi.doubleQuotedIdentifiers", "true")
+    val sess = graft.operators.Tuned.derived(spark,
+      "spark.sql.ansi.enabled" -> "true",
+      "spark.sql.ansi.doubleQuotedIdentifiers" -> "true")
     Tables.registerAll(sess, sfDir)
     val candidates = SparkEntry.ops
       .filter(op => op.oracle.isDefined && !duckdbOnly.contains(op.name))
